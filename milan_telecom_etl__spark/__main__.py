@@ -1,6 +1,8 @@
 """CLI — the reference's main.py flags restated
 (reference main.py:57-65: --setup/--load-geo/--load-data/--test/--all/
---limit-files), plus the incremental variant.
+--limit-files), plus the incremental variant. `--all` without
+`--incremental` is `pipeline.run_all`, the concurrent load DAG; the
+single-stage flags run their stage alone.
 
 Usage:
   python -m milan_telecom_etl__spark --all --data-dir /data \\
@@ -40,6 +42,7 @@ def main(argv: list[str] | None = None) -> int:
         load_mobility,
         load_traffic,
         load_traffic_incremental,
+        run_all,
         run_test_query,
     )
     from .session import get_spark
@@ -48,22 +51,30 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
     wh = Warehouse(spark, args.warehouse)
 
-    import os
+    r = rm = None
+    if args.all and not args.incremental:
+        reports = run_all(
+            spark, args.warehouse, args.data_dir, args.grid, args.provinces, args.limit_files
+        )
+        r, rm = reports["traffic"], reports["mobility"]
+    else:
+        import os
 
-    if args.setup or args.all:
-        os.makedirs(args.warehouse, exist_ok=True)
-    if args.load_geo or args.all:
-        load_geometries(wh, args.grid, args.provinces)
-    if args.load_data or args.all:
-        if args.incremental:
-            r = load_traffic_incremental(wh, args.data_dir, args.limit_files)
-        else:
-            r = load_traffic(wh, args.data_dir, args.limit_files)
+        if args.setup or args.all:
+            os.makedirs(args.warehouse, exist_ok=True)
+        if args.load_geo or args.all:
+            load_geometries(wh, args.grid, args.provinces)
+        if args.load_data or args.all:
+            if args.incremental:
+                r = load_traffic_incremental(wh, args.data_dir, args.limit_files)
+            else:
+                r = load_traffic(wh, args.data_dir, args.limit_files)
+            rm = load_mobility(wh, args.data_dir, args.limit_files)
+        wh.register_views()
+    if r is not None:
         print(f"traffic: loaded={r.loaded_rows} skipped={r.skipped} "
               f"invalid_dates={r.invalid_dates} rejected_cells={r.rejected_cells}")
-        rm = load_mobility(wh, args.data_dir, args.limit_files)
         print(f"mobility: loaded={rm.loaded_rows} skipped={rm.skipped}")
-    wh.register_views()
     if args.test or args.all:
         top = run_test_query(wh, limit=args.top_k)
         for row in top.collect():

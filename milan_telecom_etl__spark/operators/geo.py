@@ -28,6 +28,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # WGS84 / UTM zone 32N constants (EPSG:32632)
 WGS84_A = 6378137.0
@@ -261,16 +262,22 @@ def reproject_polygon(coords: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def read_geojson(spark: SparkSession, path: str) -> DataFrame:
+def read_geojson(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
     """Read a GeoJSON FeatureCollection into (feature_index, properties
     struct, geometry type, polygon/multipolygon coords).
 
     Spark-first restatement of gpd.read_file (reference src/etl.py:32,69):
     multiLine JSON scan → posexplode(features). feature_index preserves
     file order — the reference keys grid cells by DataFrame index
-    (C6, reference src/etl.py:37), so the index is semantic.
+    (C6, reference src/etl.py:37), so the index is semantic. Without a
+    `schema` Spark infers one, which costs a job over the whole file.
     """
-    raw = spark.read.option("multiLine", True).json(path)
+    reader = spark.read.option("multiLine", True)
+    if schema is not None:
+        reader = reader.schema(schema)
+    raw = reader.json(path)
     feats = raw.select(F.posexplode("features").alias("feature_index", "f"))
     return feats.select(
         "feature_index",

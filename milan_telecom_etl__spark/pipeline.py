@@ -17,14 +17,22 @@ facts → smoke query. Spark restatement:
   counters per file at src/etl.py:129-169).
 - The per-file loop disappears: one spark.read.csv over the sorted,
   limited glob (S1/S2); Spark schedules per-file splits.
+- The load is a DAG, not the reference's serial stages: the grid dim,
+  the provinces dim → mobility fact chain (mobility semi-joins the
+  provinces dim) and the traffic fact run as three concurrent job
+  chains, then the views register.
+- Every read of a warehouse table passes its declared StructType
+  (`Warehouse.read`), so no read runs a schema-inference job.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,13 +45,30 @@ from .operators.cleansing import (
 )
 from .plans.dimensions import load_grid_dim, load_provinces_dim
 from .plans.queries import top_cells
-from .schemas import MOBILITY_RAW, TRAFFIC_METRICS, TRAFFIC_RAW
+from .schemas import (
+    DIM_GRID,
+    DIM_PROVINCES,
+    FACT_MOBILITY,
+    FACT_TRAFFIC,
+    MOBILITY_RAW,
+    TRAFFIC_METRICS,
+    TRAFFIC_RAW,
+)
 from .sources.csv import read_csv_glob
 
 logger = logging.getLogger(__name__)
 
 TRAFFIC_PATTERN = "sms-call-internet-mi-*.csv"  # reference src/config.py:21
 MOBILITY_PATTERN = "mi-to-provinces-*.csv"  # reference src/config.py:22
+
+# Warehouse tables and their declared schemas. The facts also carry the
+# `load_date` partition column, which Spark reads from the directory layout.
+TABLES = {
+    "dim_grid_milan": DIM_GRID,
+    "dim_provinces_it": DIM_PROVINCES,
+    "fact_traffic_milan": FACT_TRAFFIC,
+    "fact_mobility_provinces": FACT_MOBILITY,
+}
 
 
 @dataclass
@@ -79,19 +104,22 @@ class Warehouse:
         the S8 idempotence skip."""
         import shutil
 
+        # views first, the dependent one first: dropping a view analyzes
+        # it, which fails once its table or files are gone
+        for t in ("v_hourly_traffic", *TABLES):
+            self.spark.catalog.dropTempView(t)
         if os.path.isdir(self.dir):
             for entry in os.listdir(self.dir):
                 p = os.path.join(self.dir, entry)
                 if os.path.isdir(p):
                     shutil.rmtree(p)
-        for t in (
-            "dim_grid_milan",
-            "dim_provinces_it",
-            "fact_traffic_milan",
-            "fact_mobility_provinces",
-            "v_hourly_traffic",
-        ):
-            self.spark.catalog.dropTempView(t)
+
+    def read(self, table: str) -> DataFrame:
+        """A table this engine wrote, read with its declared schema: no
+        schema-inference job. A temp view over the result keeps the file
+        listing taken here, so a view must be registered again after an
+        append to see the new files."""
+        return self.spark.read.schema(TABLES[table]).parquet(self.path(table))
 
     def exists_nonempty(self, table: str) -> bool:
         """S8 idempotence probe (reference src/etl.py:16-30)."""
@@ -99,7 +127,7 @@ class Warehouse:
         if not os.path.isdir(p):
             return False
         try:
-            return len(self.spark.read.parquet(p).take(1)) > 0
+            return len(self.read(table).take(1)) > 0
         except Exception:
             return False
 
@@ -110,14 +138,9 @@ class Warehouse:
         w.parquet(self.path(table))
 
     def register_views(self) -> None:
-        for t in (
-            "dim_grid_milan",
-            "dim_provinces_it",
-            "fact_traffic_milan",
-            "fact_mobility_provinces",
-        ):
+        for t in TABLES:
             if os.path.isdir(self.path(t)):
-                self.spark.read.parquet(self.path(t)).createOrReplaceTempView(t)
+                self.read(t).createOrReplaceTempView(t)
         self._register_hourly_view()
 
     def _register_hourly_view(self) -> None:
@@ -215,7 +238,7 @@ def load_mobility(
     if raw is None:
         report.skipped = True
         return report
-    provinces = wh.spark.read.parquet(wh.path("dim_provinces_it"))
+    provinces = wh.read("dim_provinces_it")
 
     obs = Observation("mobility_quality")
     ts = parse_timestamp("datetime")
@@ -224,20 +247,23 @@ def load_mobility(
         F.count(F.lit(1)).alias("n_raw"),
         F.sum(F.when(ts.isNull(), 1).otherwise(0)).alias("invalid_dates"),
     )
-    cleansed = cleanse_mobility(observed, provinces).withColumn(
-        "load_date", F.to_date(F.col("datetime"))
+    # rows surviving the semi-join, counted as they are written
+    loaded = Observation("mobility_loaded")
+    cleansed = (
+        cleanse_mobility(observed, provinces)
+        .withColumn("load_date", F.to_date(F.col("datetime")))
+        .observe(loaded, F.count(F.lit(1)).alias("n_loaded"))
     )
     wh.write(cleansed, "fact_mobility_provinces", partition_by=["load_date"])
     got = obs.get
     report.invalid_dates = int(got.get("invalid_dates") or 0)
-    report.loaded_rows = wh.spark.read.parquet(wh.path("fact_mobility_provinces")).count()
+    report.loaded_rows = int(loaded.get["n_loaded"])
     return report
 
 
 def run_test_query(wh: Warehouse, limit: int = 10) -> DataFrame:
     """Stage 4 (reference main.py:46-53 / src/etl.py:283-299)."""
-    fact = wh.spark.read.parquet(wh.path("fact_traffic_milan"))
-    return top_cells(fact, limit=limit)
+    return top_cells(wh.read("fact_traffic_milan"), limit=limit)
 
 
 def run_all(
@@ -252,18 +278,48 @@ def run_all(
     """The --all flow (reference main.py:67-75). `drop_existing=True`
     is the reference's destructive rebuild flag
     (create_schema(drop_existing=True)): wipe the warehouse first so
-    every loader re-runs instead of idempotence-skipping."""
+    every loader re-runs instead of idempotence-skipping.
+
+    The reference runs its stages one after another; here the three
+    independent chains of the load DAG run at once, so their small
+    Spark jobs share the executor cores:
+
+    - the grid dim;
+    - the provinces dim, then the mobility fact (it semi-joins the dim);
+    - the traffic fact.
+
+    Each chain runs in a pool thread wrapped by
+    `inheritable_thread_target`, so its jobs carry the caller's job
+    group and job tags (a plain pool thread loses them). All chains
+    finish before the first error, in the order above, is raised; the
+    views register only when every chain succeeded. A rerun without
+    `drop_existing` completes a warehouse a failed chain left short:
+    the S8 probes skip the tables already written."""
     wh = Warehouse(spark, warehouse_dir)
     os.makedirs(warehouse_dir, exist_ok=True)
     if drop_existing:
         wh.drop_all()
-    load_geometries(wh, grid_file, provinces_file)
-    reports = {
-        "traffic": load_traffic(wh, data_dir, limit_files),
-        "mobility": load_mobility(wh, data_dir, limit_files),
-    }
+
+    def provinces_then_mobility() -> LoadReport:
+        load_geometries(wh, None, provinces_file)
+        return load_mobility(wh, data_dir, limit_files)
+
+    chains = [
+        lambda: load_geometries(wh, grid_file, None),
+        provinces_then_mobility,
+        lambda: load_traffic(wh, data_dir, limit_files),
+    ]
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in chains]
+    # leaving the pool waited for every chain
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    for e in errors[1:]:
+        logger.error("another load chain failed too", exc_info=e)
+    if errors:
+        raise errors[0]
+    _, mobility, traffic = (f.result() for f in futures)
     wh.register_views()
-    return reports
+    return {"traffic": traffic, "mobility": mobility}
 
 
 # ---------------------------------------------------------------------------
@@ -314,6 +370,9 @@ def load_traffic_incremental(
     spark.createDataFrame([(f,) for f in todo], "path string").write.mode(
         "append"
     ).parquet(manifest_path)
+    # the views hold the file listing of their registration: take a new
+    # one so v_hourly_traffic shows the appended day
+    wh.register_views()
     report.loaded_rows = int(obs.get["n_raw"])
     return report
 

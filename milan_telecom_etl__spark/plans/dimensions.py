@@ -20,6 +20,7 @@ from ..operators.geo import (
     read_geojson,
     reproject_polygon,
 )
+from ..schemas import GRID_GEOJSON
 
 
 def load_grid_dim(
@@ -33,7 +34,7 @@ def load_grid_dim(
     reproduce that faithfully when bug_compatible_ids=True (default, for
     parity) and use the source cellId otherwise (the fixed behavior).
     """
-    feats = read_geojson(spark, path)
+    feats = read_geojson(spark, path, GRID_GEOJSON)
     # C8: grid file is EPSG:4326 → reproject to 32632
     projected = feats.select(
         "feature_index",
@@ -63,7 +64,8 @@ def load_provinces_dim(spark: SparkSession, path: str) -> DataFrame:
 
     Source is already EPSG:32632 (reprojection is a no-op — SURVEY.md
     C8); PROVINCIA/name → provincia conditional rename (P2); population
-    coerced, absent → 0 (C5).
+    coerced, absent → 0 (C5). The file's schema is inferred: the name
+    column is picked from the property names it carries.
     """
     feats = read_geojson(spark, path)
     prop_fields = [f.name for f in feats.schema["properties"].dataType.fields]

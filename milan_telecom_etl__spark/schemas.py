@@ -90,6 +90,43 @@ DIM_PROVINCES = T.StructType(
         T.StructField("provincia", T.StringType(), False),
         T.StructField("geometry", T.StringType()),  # WKT MultiPolygon, 32632
         T.StructField("population", T.IntegerType(), False),
+        T.StructField("minx", T.DoubleType()),
+        T.StructField("miny", T.DoubleType()),
+        T.StructField("maxx", T.DoubleType()),
+        T.StructField("maxy", T.DoubleType()),
+    ]
+)
+
+# The grid GeoJSON (read at reference src/etl.py:32): a FeatureCollection
+# of lon/lat Polygons keyed by properties.cellId. Declared so the read
+# runs no schema-inference job; keys absent from a file read as null.
+GRID_GEOJSON = T.StructType(
+    [
+        T.StructField(
+            "features",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField(
+                            "properties",
+                            T.StructType([T.StructField("cellId", T.LongType())]),
+                        ),
+                        T.StructField(
+                            "geometry",
+                            T.StructType(
+                                [
+                                    T.StructField("type", T.StringType()),
+                                    T.StructField(
+                                        "coordinates",
+                                        T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))),
+                                    ),
+                                ]
+                            ),
+                        ),
+                    ]
+                )
+            ),
+        )
     ]
 )
 

@@ -107,7 +107,7 @@ def test_traffic_cleansing_semantics(spark, warehouse):
 
 
 def test_mobility_cleansing_semantics(spark, warehouse):
-    wh, _ = warehouse
+    wh, reports = warehouse
     fact = spark.read.parquet(wh.path("fact_mobility_provinces"))
     rows = {r["provincia"]: r for r in fact.collect()}
     # fixups applied, whitespace trimmed, unmatched + bad rows dropped
@@ -115,6 +115,7 @@ def test_mobility_cleansing_semantics(spark, warehouse):
     assert rows["Milano"]["province2cell"] == 0.0  # null → 0
     # asymmetry preserved: mobility negatives are NOT clamped
     assert rows["Bolzano"]["cell2province"] == -2.0
+    assert reports["mobility"].loaded_rows == fact.count() == 4
 
 
 def test_idempotent_rerun(spark, warehouse, data_dir):
@@ -336,3 +337,130 @@ def test_drop_existing_rebuilds_schema(spark, data_dir, tmp_path):
     assert spark.read.parquet(
         os.path.join(wh_dir, "fact_traffic_milan")
     ).count() > 0
+
+
+def test_declared_schemas_match_written_tables(spark, warehouse):
+    """`Warehouse.read` passes the schemas.py StructType; it must agree
+    with what the loads write, or reads would null out or fail."""
+    from milan_telecom_etl__spark.pipeline import TABLES
+
+    wh, _ = warehouse
+
+    def shape(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for t in TABLES:
+        written = spark.read.parquet(wh.path(t)).schema
+        assert shape(wh.read(t).schema) == shape(written), t
+
+
+def test_hourly_view_shows_incremental_day(spark, tmp_path):
+    """The views are registered again after an incremental append, so
+    v_hourly_traffic sees the new day's files."""
+    from milan_telecom_etl__spark.pipeline import load_traffic_incremental
+
+    header = "datetime,CellID,countrycode,smsin,smsout,callin,callout,internet\n"
+    d = tmp_path / "feed"
+    d.mkdir()
+    (d / "sms-call-internet-mi-2013-11-01.csv").write_text(
+        header + "2013-11-01 00:00:00,1,39,1.0,1.0,1.0,1.0,1.0\n"
+    )
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    load_traffic_incremental(wh, str(d))
+    (d / "sms-call-internet-mi-2013-11-02.csv").write_text(
+        header + "2013-11-02 05:00:00,2,39,2.0,2.0,2.0,2.0,2.0\n"
+    )
+    load_traffic_incremental(wh, str(d))
+    hours = {
+        (r["hour"].isoformat(), r["cell_id"]): r["total_activity"]
+        for r in spark.table("v_hourly_traffic").collect()
+    }
+    assert hours == {("2013-11-01T00:00:00", 1): 5.0, ("2013-11-02T05:00:00", 2): 10.0}
+
+
+def _dims(data_dir, provinces="provinces.geojson"):
+    return dict(
+        grid_file=str(data_dir / "grid.geojson"),
+        provinces_file=str(data_dir / provinces),
+    )
+
+
+def test_run_all_jobs_carry_caller_group_and_tag(spark, data_dir, tmp_path):
+    """The load chains run in pool threads; every job they start keeps
+    the job group and job tag of the thread that called run_all."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    tracker = jsc.statusTracker()
+    group, tag = "run_all_dag_group", "run_all_dag_tag"
+    jsc.listenerBus().waitUntilEmpty()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "load DAG test")
+    sc.addJobTag(tag)
+    try:
+        run_all(spark, str(tmp_path / "wh"), str(data_dir), **_dims(data_dir))
+    finally:
+        sc.removeJobTag(tag)
+        sc._jsc.clearJobGroup()
+    jsc.listenerBus().waitUntilEmpty()
+    in_group = set(tracker.getJobIdsForGroup(group))
+    assert len(in_group) >= 5  # a write per table plus the broadcast dim
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+    assert set(tracker.getJobIdsForTag(tag)) == in_group
+
+
+def test_run_all_raises_after_every_chain_finished(spark, data_dir, tmp_path):
+    """A failing chain (missing provinces file) does not stop the
+    others: run_all raises its error once they are done, and a rerun
+    without drop_existing completes the warehouse through the S8 skips."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    wh_dir = str(tmp_path / "wh")
+    wh = Warehouse(spark, wh_dir)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_all(spark, wh_dir, str(data_dir), **_dims(data_dir, "missing.geojson"))
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert wh.exists_nonempty("dim_grid_milan")
+    assert wh.exists_nonempty("fact_traffic_milan")
+    assert not os.path.isdir(wh.path("dim_provinces_it"))
+    assert not os.path.isdir(wh.path("fact_mobility_provinces"))
+
+    reports = run_all(spark, wh_dir, str(data_dir), **_dims(data_dir))
+    assert reports["traffic"].skipped
+    assert not reports["mobility"].skipped and reports["mobility"].loaded_rows == 4
+    assert spark.table("dim_provinces_it").count() == 4
+    assert spark.table("v_hourly_traffic").count() == 2
+
+
+def test_cli_all_runs_the_load_dag(monkeypatch, tmp_path):
+    """`--all` goes through run_all, not a serial restatement."""
+    from types import SimpleNamespace
+
+    from milan_telecom_etl__spark import __main__ as cli
+    from milan_telecom_etl__spark import pipeline, session
+    from milan_telecom_etl__spark.pipeline import LoadReport
+
+    calls = []
+    stub_spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(setLogLevel=lambda level: None),
+        stop=lambda: None,
+    )
+
+    def fake_run_all(*args):
+        calls.append(args)
+        return {"traffic": LoadReport("fact_traffic_milan"),
+                "mobility": LoadReport("fact_mobility_provinces")}
+
+    def serial_stage(*args):
+        raise AssertionError("serial stage called")
+
+    monkeypatch.setattr(session, "get_spark", lambda app_name: stub_spark)
+    monkeypatch.setattr(pipeline, "run_all", fake_run_all)
+    monkeypatch.setattr(pipeline, "run_test_query",
+                        lambda wh, limit: SimpleNamespace(collect=lambda: []))
+    for name in ("load_geometries", "load_traffic", "load_mobility"):
+        monkeypatch.setattr(pipeline, name, serial_stage)
+    wh_dir, data = str(tmp_path / "wh"), str(tmp_path)
+    assert cli.main(["--all", "--warehouse", wh_dir, "--data-dir", data, "--grid", "g"]) == 0
+    assert calls == [(stub_spark, wh_dir, data, "g", None, None)]
